@@ -21,7 +21,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from osm_history_splitter_spark import oracle_queries as oq  # noqa: E402
 from osm_history_splitter_spark import text_queries as tq  # noqa: E402
-from osm_history_splitter_spark.session import get_spark  # noqa: E402
+from osm_history_splitter_spark.session import get_spark, session_defaults  # noqa: E402
 
 BENCH_QUERIES = [
     "pages_split",
@@ -201,7 +201,7 @@ def _run_once(sf_dir: str, cores: int | None = None) -> dict:
         "rows": rows,
         "cap_drops": cap_drops,
         **sink_thr,
-        "cores": cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cores": cores or session_defaults()[0],
     }
     spark.stop()
     if shm:

@@ -214,6 +214,9 @@ def fetch_and_split(
             }
         out.mkdir(parents=True, exist_ok=True)
         (out / "_manifest.json").write_text(json.dumps(manifest, default=str))
+    # release this tick's world: a loader that caches its decode
+    # (sources.pbf.load_pbf_dataframes) frees it with the last frame
+    del nodes, ways, relations
 
     # flip the stamp + symlink LAST — a crashed run re-splits next tick
     stamp_file.write_text(date)

@@ -1015,9 +1015,12 @@ def s2_cell_np(lon, lat, res: int):
 def s2_cell_to_lonlat_np(key, res: int):
     """Cell-CENTER inverse (lon, lat degrees) — the roundtrip certificate:
     re-encoding a center at the same res must return the same key. Uses
-    the published FaceUVtoXYZ chart table."""
+    the published FaceUVtoXYZ chart table. Negative keys (the ``-1``
+    sentinel of a missing coordinate) decode to NaN, not to a point."""
     _check_s2_res(res)
     key = np.asarray(key, np.int64)
+    valid = key >= 0
+    key = np.where(valid, key, 0)
     quad = np.int64(1) << (2 * res)
     face, d = key // quad, key % quad
     i, j = hilbert_d2xy_np(d, res)
@@ -1040,8 +1043,8 @@ def s2_cell_to_lonlat_np(key, res: int):
         [v, v, one, -u, -u],
         default=-one,
     )
-    lon = np.degrees(np.arctan2(y, x))
-    lat = np.degrees(np.arctan2(z, np.hypot(x, y)))
+    lon = np.where(valid, np.degrees(np.arctan2(y, x)), np.nan)
+    lat = np.where(valid, np.degrees(np.arctan2(z, np.hypot(x, y))), np.nan)
     return lon, lat
 
 
@@ -1067,7 +1070,11 @@ def s2_cell_expr(lon: Column, lat: Column, res: int) -> Column:
     ONE Arrow-batched pandas UDF over the shared numpy kernel (trig +
     Hilbert rounds per batch; the hilbert_expr precedent). Use exactly
     like zorder/hilbert keys: repartitionByRange + sortWithinPartitions
-    at write time, groupBy for skew-free global spatial rollups."""
+    at write time, groupBy for skew-free global spatial rollups.
+
+    A NULL, NaN or infinite ``lon``/``lat`` gets the key ``-1`` (no valid
+    key is negative), so such rows group together instead of landing in a
+    real cell; :func:`s2_cell_to_lonlat_np` decodes ``-1`` back to NaN."""
     _check_s2_res(res)
 
     def _k(lo: pd.Series, la: pd.Series) -> pd.Series:

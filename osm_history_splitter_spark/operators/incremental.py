@@ -135,7 +135,7 @@ def save_index_stages(
     the marker stages exist — a later ``incremental_resplit`` against this
     checkpoint then takes the indexed path. ``way_refs``: reuse the
     membership build's persisted refs frame instead of re-exploding."""
-    from ..splitter import _concurrent
+    from ..session import run_concurrent
 
     # two dependency waves, each wave's stages independent of each other
     # — run them concurrently so the small bucketed writes overlap
@@ -143,7 +143,7 @@ def save_index_stages(
     # wave 1 reads only the world frames, wave 2 reads wave-1 stages
     # (node_ways ← way_refs, member_rels ← rel_member_idx) or marker
     # stages that predate this call (extra_counts ← way_members)
-    _concurrent(
+    run_concurrent(
         [
             lambda: store.get_or_compute(
                 "node_sigs", lambda: per_id_sigs(nodes)
@@ -178,7 +178,7 @@ def save_index_stages(
             ),
         ]
     )
-    _concurrent(
+    run_concurrent(
         [
             lambda: store.get_or_compute(
                 "node_ways",

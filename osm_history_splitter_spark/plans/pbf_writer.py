@@ -11,12 +11,14 @@ to a binary container:
    same-extract rows into one PrimitiveBlock blob (string table local to
    the block, per spec) via Arrow ``mapInPandas`` — the payload never
    visits the driver unassembled;
-2. fragments land in a parquet staging table keyed by
-   (extract, kind_rank, pid, seq) — ``spark_partition_id`` is captured
-   AFTER the range partition, so (pid, seq) reproduces the global sort
-   order;
-3. the driver streams header-blob + ordered fragment blobs into the
-   final file per extract (``toLocalIterator`` — bounded memory). PBF
+2. fragments land in a per-kind parquet staging table
+   (``_pbf_fragments/<kind>/extract=<name>/``) keyed by (pid, seq) —
+   ``spark_partition_id`` is captured AFTER the range partition, so
+   (pid, seq) reproduces the kind's global sort order. The three kind
+   passes write disjoint directories, so they run as concurrent jobs;
+3. the driver streams header-blob + each extract's fragment blobs —
+   nodes, then ways, then relations, each in (pid, seq) order — into the
+   final file (pyarrow reads of the staged files, bounded memory). PBF
    blobs are self-contained, so byte concatenation of blobs IS a valid
    file, exactly like the multi-member gzip trick in the XML sink.
 """
@@ -29,7 +31,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import run_concurrent
 from ..sources.pbf import (
+    KINDS,
     encode_data_blob,
     encode_dense_nodes_blob,
     encode_header_blob,
@@ -173,15 +177,12 @@ def write_extracts_pbf(
     }
     n = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     stage = Path(out_dir) / "_pbf_fragments"
-    # the three kind passes APPEND into one staging table — a retried run
-    # must not inherit a crashed run's fragments
+    # a retried run must not inherit a crashed run's fragments
     import shutil
 
     shutil.rmtree(stage, ignore_errors=True)
 
-    for rank, (kind, df) in enumerate(
-        (("node", nodes), ("way", ways), ("relation", relations))
-    ):
+    def stage_kind(kind: str, df: DataFrame) -> None:
         cols = _KIND_COLS[kind]
         staged = (
             df.select("extract", *cols)
@@ -192,17 +193,21 @@ def write_extracts_pbf(
                 _make_packer(kind),
                 schema="extract string, pid int, seq long, blob binary",
             )
-            .withColumn("kind_rank", F.lit(rank))
         )
-        # partitioned by extract so each final-assembly read scans ONLY
-        # its own extract's fragment files (E small reads, not E full
-        # scans of the whole staging table)
-        staged.write.mode("append").partitionBy("extract").parquet(
-            str(stage)
-        )
+        # one directory per kind, partitioned by extract so each final
+        # assembly read scans ONLY its own extract's fragment files (E
+        # small reads, not E full scans of the whole staging table)
+        staged.write.partitionBy("extract").parquet(str(stage / kind))
+
+    # the kind passes write disjoint directories: run them concurrently
+    # so their short jobs overlap instead of queueing
+    run_concurrent(
+        lambda kind=kind, df=df: stage_kind(kind, df)
+        for kind, df in zip(KINDS, (nodes, ways, relations))
+    )
 
     # final assembly: ONE file per extract is the format contract, so a
-    # driver-side concat must happen somewhere. The staging table is
+    # driver-side concat must happen somewhere. The staging tables are
     # partitioned by extract on a filesystem the driver can read, so the
     # driver streams each extract's fragment parquet directly with
     # pyarrow — no per-extract Spark job, and the blobs never cross the
@@ -215,35 +220,27 @@ def write_extracts_pbf(
     import pyarrow.parquet as pa_pq
 
     frag_dirs = {
-        unquote(d.name.split("=", 1)[1]): d
-        for d in stage.glob("extract=*")
-        if d.is_dir()
+        kind: {
+            unquote(d.name.split("=", 1)[1]): d
+            for d in (stage / kind).glob("extract=*")
+            if d.is_dir()
+        }
+        for kind in KINDS
     }
 
     def _ordered_fragment_files(frag_dir: Path) -> list[Path]:
-        # each staged part-file is one task's output for one kind pass:
-        # exactly one (kind_rank, pid), rows already in seq order — so
-        # ordering FILES by their first row's key reproduces the global
-        # (kind_rank, pid, seq) order without materializing anything
+        # each staged part-file is one task's output: exactly one pid,
+        # rows already in seq order — so ordering FILES by their first
+        # row's key reproduces the kind's global (pid, seq) order
+        # without materializing anything
         keyed = []
         for f in sorted(frag_dir.rglob("*.parquet")):
             pf = pa_pq.ParquetFile(str(f))
             if pf.metadata.num_rows == 0:
                 continue
-            first = next(
-                pf.iter_batches(
-                    batch_size=1, columns=["kind_rank", "pid", "seq"]
-                )
-            )
+            first = next(pf.iter_batches(batch_size=1, columns=["pid", "seq"]))
             keyed.append(
-                (
-                    (
-                        first["kind_rank"][0].as_py(),
-                        first["pid"][0].as_py(),
-                        first["seq"][0].as_py(),
-                    ),
-                    f,
-                )
+                ((first["pid"][0].as_py(), first["seq"][0].as_py()), f)
             )
         keyed.sort()
         return [f for _, f in keyed]
@@ -258,12 +255,14 @@ def write_extracts_pbf(
                     (e.minlon, e.minlat, e.maxlon, e.maxlat), history=history
                 )
             )
-            frag_dir = frag_dirs.get(e.name)
-            for f in (
-                _ordered_fragment_files(frag_dir)
-                if frag_dir is not None
-                else []
-            ):
+            # nodes, then ways, then relations (the spec's element order)
+            frag_files = [
+                f
+                for kind in KINDS
+                if e.name in frag_dirs[kind]
+                for f in _ordered_fragment_files(frag_dirs[kind][e.name])
+            ]
+            for f in frag_files:
                 pf = pa_pq.ParquetFile(str(f))
                 # blobs are ~16 MB blocks: stream small batches so driver
                 # memory stays bounded by a few blocks, as before

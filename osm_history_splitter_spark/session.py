@@ -33,14 +33,70 @@ def parallelize_scan(df: DataFrame) -> DataFrame:
     return df
 
 
+def run_concurrent(thunks):
+    """Run independent Spark actions from a small thread pool so each
+    job's tail back-fills executors freed by the others (the scheduler
+    runs concurrent jobs FIFO, so their tails overlap). Results in
+    submission order; the first failure re-raises.
+
+    Each thunk runs with its own copy of the caller's Spark local
+    properties (job group, description), so its jobs are tagged like
+    the caller's would be."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    thunks = list(thunks)
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        # one wrap per thunk: each clones the properties, so threads never
+        # share (and race on) one mutable property set
+        thunks = [inheritable_thread_target(spark)(t) for t in thunks]
+    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
+        futures = [ex.submit(t) for t in thunks]
+        return [f.result() for f in futures]
+
+
+#: driver heap ceiling when ``SPARK_DRIVER_MEM`` is unset
+_MAX_DRIVER_MB = 16 * 1024
+
+
+def session_defaults(
+    env=None, cpus: int | None = None, ram_bytes: int | None = None
+) -> tuple[int, str]:
+    """Host-sized ``(cores, driver_memory)`` defaults of :func:`get_spark`.
+
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` in ``env`` win; otherwise
+    cores are the CPUs this process may run on and the heap is half the
+    physical RAM, capped at 16 g. ``cpus``/``ram_bytes`` override the
+    host probe (pure: nothing here starts a session)."""
+    env = os.environ if env is None else env
+    if env.get("SPARK_GRAFT_CPUS"):
+        cores = int(env["SPARK_GRAFT_CPUS"])
+    else:
+        cores = cpus if cpus is not None else len(os.sched_getaffinity(0))
+    mem = env.get("SPARK_DRIVER_MEM")
+    if not mem:
+        if ram_bytes is None:
+            ram_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        mem = f"{min(_MAX_DRIVER_MB, ram_bytes // 2 // 2**20)}m"
+    return cores, mem
+
+
 def get_spark(
     app_name: str = "splitter-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Session with host-sized defaults (:func:`session_defaults`);
+    ``cores`` and ``extra_conf`` entries (e.g. ``spark.driver.memory``)
+    override them."""
+    default_cores, driver_mem = session_defaults()
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
@@ -52,7 +108,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
         .config("spark.executor.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")

@@ -9,6 +9,18 @@ module gives the engine the same surface: :func:`read_pbf` →
 block encoders that ``plans/pbf_writer.write_extracts_pbf`` runs on
 executors.
 
+Distributed ingest decodes each blob ONCE. One blob-range
+``mapInPandas`` turns the file into a single all-kinds frame (a
+``kind`` column plus the union of the node, way and relation columns);
+:func:`load_pbf_dataframes` persists that frame (``MEMORY_AND_DISK``)
+and returns one projection per kind, so the world signatures, pass 1 and
+pass 2 of a split all read the cache instead of re-decoding the file.
+Cache lifetime: the persisted decode lives exactly as long as the three
+returned frames — a ``weakref.finalize`` on an owner object they all
+reference unpersists it once the last of them is garbage, so a service
+that loads a new world per tick never accumulates cached worlds.
+:func:`read_pbf_elements` is an unpersisted filter over the same decoder.
+
 Wire-format facts used (all from the public spec):
 
 - a file is a sequence of blobs: 4-byte big-endian BlobHeader length,
@@ -51,6 +63,8 @@ _GRANULARITY = 100  # nanodegrees per unit (spec default)
 _DATE_GRANULARITY = 1000  # ms per timestamp unit (spec default)
 _MEMBER_ENUM = {"n": 0, "w": 1, "r": 2}
 _MEMBER_ENUM_REV = {0: "n", 1: "w", 2: "r"}
+#: the entity kinds, in the order readers return them
+KINDS = ("node", "way", "relation")
 
 
 # --- protobuf wire primitives ------------------------------------------------
@@ -421,9 +435,7 @@ def _decode_dense(
 
 def _parse_block(payload: bytes):
     """PrimitiveBlock envelope: (stringtable, groups, granularity,
-    date_granularity, lat_offset, lon_offset) — the one field loop both
-    the driver codec (read_pbf) and the distributed decoder
-    (_decode_payload) share."""
+    date_granularity, lat_offset, lon_offset)."""
     strings: list[str] = []
     groups = []
     gran, dgran, lat_off, lon_off = 100, 1000, 0, 0
@@ -443,32 +455,39 @@ def _parse_block(payload: bytes):
     return strings, groups, gran, dgran, lat_off, lon_off
 
 
+def _iter_elements(payload: bytes):
+    """``(kind, model-schema row)`` for every element of one OSMData
+    PrimitiveBlock payload, in file order — the one element decoder
+    behind both the driver codec (:func:`read_pbf`) and the distributed
+    ingest (:func:`_decode_payload`)."""
+    strings, groups, gran, dgran, lat_off, lon_off = _parse_block(payload)
+    for g in groups:
+        for f, _, v in _fields(g):
+            if f == 1:  # plain Node
+                yield "node", _decode_node(
+                    v, strings, gran, lat_off, lon_off, dgran
+                )
+            elif f == 2:  # DenseNodes
+                for r in _decode_dense(
+                    v, strings, gran, lat_off, lon_off, dgran
+                ):
+                    yield "node", r
+            elif f == 3:
+                yield "way", _decode_way(v, strings, dgran)
+            elif f == 4:
+                yield "relation", _decode_relation(v, strings, dgran)
+
+
 def read_pbf(path: str):
     """→ (node_rows, way_rows, relation_rows) matching model schemas —
     the same contract as ``osm_xml.parse_osm_xml``."""
-    nodes, ways, relations = [], [], []
+    out = {kind: [] for kind in KINDS}
     data = open(path, "rb").read()
     for btype, payload in iter_blobs(data):
-        if btype != "OSMData":
-            continue
-        strings, groups, gran, dgran, lat_off, lon_off = _parse_block(
-            payload
-        )
-        for g in groups:
-            for f, _, v in _fields(g):
-                if f == 1:  # plain Node
-                    nodes.append(
-                        _decode_node(v, strings, gran, lat_off, lon_off, dgran)
-                    )
-                elif f == 2:  # DenseNodes
-                    nodes.extend(
-                        _decode_dense(v, strings, gran, lat_off, lon_off, dgran)
-                    )
-                elif f == 3:
-                    ways.append(_decode_way(v, strings, dgran))
-                elif f == 4:
-                    relations.append(_decode_relation(v, strings, dgran))
-    return nodes, ways, relations
+        if btype == "OSMData":
+            for kind, row in _iter_elements(payload):
+                out[kind].append(row)
+    return tuple(out[kind] for kind in KINDS)
 
 
 def _decode_node(
@@ -573,46 +592,45 @@ def scan_blob_index(path: str) -> list[tuple[int, int, str]]:
     return out
 
 
-def _decode_payload(payload: bytes, want: str) -> list[tuple]:
-    """Rows of one kind from one OSMData PrimitiveBlock payload; groups
-    of other kinds are skipped without decoding their elements."""
-    strings, groups, gran, dgran, lat_off, lon_off = _parse_block(payload)
+def _element_schema():
+    """The all-kinds decode frame: ``kind``, the shared metadata columns,
+    then ``lat``, ``lon``, ``refs``, ``members``, ``tags`` — each typed
+    as in ``model``, so ``id`` and ``version`` stay non-null."""
+    from pyspark.sql import types as T
+
+    from ..model import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
+
+    fields = {
+        f.name: f
+        for schema in (NODE_SCHEMA, WAY_SCHEMA, RELATION_SCHEMA)
+        for f in schema.fields
+    }
+    names = NODE_SCHEMA.fieldNames()[:9] + ["refs", "members", "tags"]
+    return T.StructType(
+        [T.StructField("kind", T.StringType(), False)]
+        + [fields[n] for n in names]
+    )
+
+
+def _decode_payload(payload: bytes) -> list[tuple]:
+    """Rows of the all-kinds schema (:func:`_element_schema`) for every
+    element of one OSMData payload; the other kinds' columns are None."""
     rows = []
-    for g in groups:
-        for f, _, v in _fields(g):
-            if want == "node" and f == 1:
-                rows.append(
-                    _decode_node(v, strings, gran, lat_off, lon_off, dgran)
-                )
-            elif want == "node" and f == 2:
-                rows.extend(
-                    _decode_dense(v, strings, gran, lat_off, lon_off, dgran)
-                )
-            elif want == "way" and f == 3:
-                rows.append(_decode_way(v, strings, dgran))
-            elif want == "relation" and f == 4:
-                rows.append(_decode_relation(v, strings, dgran))
+    for kind, r in _iter_elements(payload):
+        if kind == "node":
+            rows.append(("node",) + r[:9] + (None, None, r[9]))
+        elif kind == "way":
+            rows.append(("way",) + r[:7] + (None, None, r[7], None, r[8]))
+        else:
+            rows.append(("relation",) + r[:7] + (None, None, None, r[7], r[8]))
     return rows
 
 
-def read_pbf_elements(spark, path: str, tag: str, blobs_per_task: int = 8):
-    """Distributed PBF ingest — the binary sibling of
-    ``ingest.read_osm_elements_ranged``: the driver indexes blob
-    boundaries (metadata only), executors seek to whole-blob byte ranges
-    and decode them in Arrow ``mapInPandas``. Blobs are self-contained
-    (per-block string tables), so range ownership is exact by
-    construction — no overscan needed, unlike the XML reader.
-
-    Local/NFS paths (each executor opens the file); for object stores
-    swap the ``open`` for fsspec, the ranges are already the right
-    shape for ranged GETs."""
-    from ..model import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
-
-    schema = {
-        "node": NODE_SCHEMA, "way": WAY_SCHEMA, "relation": RELATION_SCHEMA
-    }[tag]
-    cols = [f.name for f in schema.fields]
-
+def _decode_frame(spark, path: str, blobs_per_task: int = 8):
+    """One blob-range ``mapInPandas`` that decodes every OSMData blob of
+    ``path`` once into the all-kinds frame (:func:`_element_schema`)."""
+    schema = _element_schema()
+    cols = schema.fieldNames()
     data_blobs = [
         (lo, hi) for lo, hi, t in scan_blob_index(path) if t == "OSMData"
     ]
@@ -637,20 +655,79 @@ def read_pbf_elements(spark, path: str, tag: str, blobs_per_task: int = 8):
                     data = f.read(int(hi - lo))
                     for btype, payload in iter_blobs(data):
                         if btype == "OSMData":
-                            rows.extend(_decode_payload(payload, tag))
+                            rows.extend(_decode_payload(payload))
                 yield pd.DataFrame(rows, columns=cols)
 
     return rdf.mapInPandas(parse, schema=schema)
 
 
+def _kind_frame(decoded, tag: str):
+    """The ``tag`` rows of an all-kinds frame, in that kind's ``model``
+    schema."""
+    from pyspark.sql import functions as F
+
+    from ..model import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
+
+    schema = {
+        "node": NODE_SCHEMA, "way": WAY_SCHEMA, "relation": RELATION_SCHEMA
+    }[tag]
+    return decoded.filter(F.col("kind") == tag).select(*schema.fieldNames())
+
+
+def read_pbf_elements(spark, path: str, tag: str, blobs_per_task: int = 8):
+    """Distributed PBF ingest of one entity kind — the binary sibling of
+    ``ingest.read_osm_elements_ranged``: the driver indexes blob
+    boundaries (metadata only), executors seek to whole-blob byte ranges
+    and decode them in Arrow ``mapInPandas``. Blobs are self-contained
+    (per-block string tables), so range ownership is exact by
+    construction — no overscan needed, unlike the XML reader.
+
+    A lazy filter over the all-kinds decode: every scan decodes the
+    whole file. Use :func:`load_pbf_dataframes` for all three kinds.
+
+    Local/NFS paths (each executor opens the file); for object stores
+    swap the ``open`` for fsspec, the ranges are already the right
+    shape for ranged GETs."""
+    return _kind_frame(_decode_frame(spark, path, blobs_per_task), tag)
+
+
+class _DecodeCache:
+    """Owner of one persisted all-kinds decode. Every frame
+    :func:`load_pbf_dataframes` returns references it; when the last of
+    them is collected, a ``weakref.finalize`` unpersists the decode."""
+
+    __slots__ = ("__weakref__",)
+
+
+def _release(decoded) -> None:
+    # a stopped session took its cache with it
+    if decoded.sparkSession.sparkContext._jsc is not None:
+        decoded.unpersist()
+
+
 def load_pbf_dataframes(spark, path: str):
     """(nodes, ways, relations) DataFrames from one ``.os[mh].pbf`` —
-    the ``world_loader`` shape ``fetch.fetch_and_split`` consumes."""
-    return (
-        read_pbf_elements(spark, path, "node"),
-        read_pbf_elements(spark, path, "way"),
-        read_pbf_elements(spark, path, "relation"),
+    the ``world_loader`` shape ``fetch.fetch_and_split`` consumes.
+
+    The file is decoded once: the three frames are projections of one
+    persisted (``MEMORY_AND_DISK``) all-kinds decode, materialized by
+    the first action on any of them. The cache lives exactly as long as
+    the frames: it is released once all three are garbage (derived
+    frames do not keep it alive), so a service that loads a world per
+    tick does not pin old worlds in executor storage."""
+    import weakref
+
+    from pyspark.storagelevel import StorageLevel
+
+    decoded = _decode_frame(spark, path).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
+    owner = _DecodeCache()
+    weakref.finalize(owner, _release, decoded).atexit = False
+    frames = tuple(_kind_frame(decoded, tag) for tag in KINDS)
+    for df in frames:
+        df._pbf_decode_cache = owner
+    return frames
 
 
 # --- DenseNodes fast path (numpy-vectorized varints) -------------------------

@@ -24,6 +24,7 @@ from .operators.softcut import softcut_membership
 from .plans.catalog import ExtractCatalog
 from .plans.checkpoint import StageStore
 from .plans.io import write_extracts
+from .session import run_concurrent
 from .sources.config import parse_config
 
 __all__ = [
@@ -37,22 +38,6 @@ __all__ = [
 
 #: marker-table stages checkpointed between softcut pass 1 and pass 2
 MARKER_STAGES = ("node_members", "way_members", "extra_nodes", "relation_members")
-
-
-def _concurrent(thunks):
-    """Run independent Spark actions from a small thread pool so each
-    job's tail back-fills executors freed by the others (the scheduler
-    runs concurrent jobs FIFO — exactly the overlap the optimization
-    guide §2.6 describes). Results in submission order; the first
-    failure re-raises."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    thunks = list(thunks)
-    if len(thunks) <= 1:
-        return [t() for t in thunks]
-    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futures = [ex.submit(t) for t in thunks]
-        return [f.result() for f in futures]
 
 
 def _world_sigs(nodes: DataFrame, ways: DataFrame, relations: DataFrame) -> dict:
@@ -71,7 +56,7 @@ def _world_sigs(nodes: DataFrame, ways: DataFrame, relations: DataFrame) -> dict
     from pyspark.sql import functions as F
 
     frames = [("nodes", nodes), ("ways", ways), ("relations", relations)]
-    rows = _concurrent(
+    rows = run_concurrent(
         lambda df=df: df.select(
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(id, version))").alias("h"),
@@ -266,7 +251,10 @@ def _publish(spark, outs: dict, publish_dir: str) -> dict:
     # strictly after all three
     entities = ("nodes", "ways", "relations")
     versions = dict(
-        zip(entities, _concurrent(lambda e=e: _commit_entity(e) for e in entities))
+        zip(
+            entities,
+            run_concurrent(lambda e=e: _commit_entity(e) for e in entities),
+        )
     )
     versions["group"] = TableGroup(spark, publish_dir).pin(
         {e: versions[e] for e in entities}
@@ -315,7 +303,7 @@ def run_split(
         res = hardcut(nodes, ways, relations, catalog)
         # disjoint output dirs — concurrent writes, see the softcut branch
         manifests["nodes"], manifests["ways"], manifests["relations"] = (
-            _concurrent(
+            run_concurrent(
                 [
                     lambda: write_extracts(
                         res.nodes, f"{out_path}/nodes", "hardcut_nodes",
@@ -386,10 +374,16 @@ def run_split(
     if not all(store.has(n) for n in MARKER_STAGES):
         _write_world_sigs(store.root, cur_sigs)
         m = softcut_membership(nodes, ways, relations, catalog, persist=True)
+        # node_members first: every other marker reads its cache, and once
+        # it is materialized their joins plan on its real size. The other
+        # three write disjoint stages — run them concurrently so their
+        # short jobs overlap instead of queueing behind each other's
+        # driver-side gaps
         store.get_or_compute("node_members", lambda: m.node_members)
-        store.get_or_compute("way_members", lambda: m.way_members)
-        store.get_or_compute("extra_nodes", lambda: m.extra_nodes)
-        store.get_or_compute("relation_members", lambda: m.relation_members)
+        run_concurrent(
+            lambda s=s: store.get_or_compute(s, lambda: getattr(m, s))
+            for s in MARKER_STAGES[1:]
+        )
     if write_indexes:
         from .operators.incremental import save_index_stages
 
@@ -409,7 +403,7 @@ def run_split(
     # concurrently so each job's straggler tail back-fills the executors
     # the others free (guide §2.6)
     outs = pass2_outputs(nodes, ways, relations, store)
-    manifests["nodes"], manifests["ways"], manifests["relations"] = _concurrent(
+    manifests["nodes"], manifests["ways"], manifests["relations"] = run_concurrent(
         [
             lambda: write_extracts(
                 outs["nodes"], f"{out_path}/nodes", "softcut_nodes",
@@ -784,7 +778,7 @@ def incremental_resplit(
         report.update(
             zip(
                 (e for e, _ in ents),
-                _concurrent(
+                run_concurrent(
                     lambda e=e, df=df: _entity_tick(e, df) for e, df in ents
                 ),
             )
@@ -953,7 +947,7 @@ def incremental_resplit(
     report.update(
         zip(
             (e for e, _ in ents),
-            _concurrent(
+            run_concurrent(
                 lambda e=e, df=df: _entity_diff_commit(e, df)
                 for e, df in ents
             ),

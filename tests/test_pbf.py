@@ -1,6 +1,8 @@
 """OSM PBF codec (sources/pbf.py) and distributed sink
 (plans/pbf_writer.py): pure-python roundtrips, DenseNodes interop,
-golden split of the reference fixture, block/partition boundaries."""
+golden split of the reference fixture, block/partition boundaries, the
+decode-once ingest and its cache lifetime, resume after a failed marker
+save."""
 
 from __future__ import annotations
 
@@ -146,8 +148,8 @@ def test_distributed_sink_golden_roundtrip(spark, tmp_path):
 
 def test_sink_block_and_partition_boundaries(spark, tmp_path, monkeypatch):
     """Many rows, tiny blocks, several partitions and two extracts: the
-    (kind_rank, pid, seq) fragment order must reassemble the exact
-    global (extract, id, version) order with no loss."""
+    per-kind (pid, seq) fragment order must reassemble the exact global
+    (extract, id, version) order with no loss."""
     import osm_history_splitter_spark.plans.pbf_writer as pw
     from osm_history_splitter_spark.model import (
         NODE_SCHEMA,
@@ -456,3 +458,332 @@ def test_xml_and_pbf_sinks_emit_identical_element_sets(spark, tmp_path):
     assert xml_n == pbf_n
     assert xml_w == pbf_w
     assert xml_r == pbf_r
+
+
+# --- decode once, release after; the sink and resume on a seeded world -------
+
+
+def _seeded_world(seed: int, n_nodes=240, n_ways=60, n_rels=16):
+    """Model-schema rows of a small random history: 1-2 versions per id,
+    deleted node versions without a position, ways over nearby nodes,
+    relations with node/way/relation members. Coordinates sit on the
+    PBF 1e-7 lattice, so codec roundtrips are exact."""
+    import random
+
+    rng = random.Random(seed)
+
+    def meta(i, v):
+        return (
+            i, v, TS + dt.timedelta(seconds=37 * i + v),
+            100 + i % 5, 1000 * i + v, f"u{i % 4}",
+        )
+
+    nodes = []
+    for i in range(1, n_nodes + 1):
+        for v in range(1, rng.randint(1, 2) + 1):
+            m = meta(i, v)
+            deleted = v == 2 and rng.random() < 0.2
+            pos = (
+                (None, None) if deleted
+                else (rng.randint(-9000, 9000) / 1e4, rng.randint(-9000, 9000) / 1e4)
+            )
+            tags = {"n": str(i)} if i % 3 == 0 else {}
+            nodes.append(m[:2] + (not deleted,) + m[2:] + pos + (tags,))
+    ways = []
+    for i in range(1, n_ways + 1):
+        for v in range(1, rng.randint(1, 2) + 1):
+            start = rng.randint(1, n_nodes - 8)
+            refs = list(range(start, start + rng.randint(2, 6)))
+            m = meta(i, v)
+            ways.append(m[:2] + (True,) + m[2:] + (refs, {"w": str(v)}))
+    rels = []
+    for i in range(1, n_rels + 1):
+        members = [("w", rng.randint(1, n_ways), "outer")]
+        if rng.random() < 0.5:
+            members.append(("n", rng.randint(1, n_nodes), "stop"))
+        if i > 1 and rng.random() < 0.4:
+            members.append(("r", rng.randint(1, i - 1), ""))
+        m = meta(i, 1)
+        rels.append(m[:2] + (True,) + m[2:] + (members, {"type": "route"}))
+    return nodes, ways, rels
+
+
+def _write_multiblob(path, nodes, ways, rels, per_blob=50):
+    """A history PBF with several blobs per kind and one mixed blob."""
+    blobs = [encode_header_blob()]
+    blobs += [
+        encode_data_blob(nodes[i:i + per_blob])
+        for i in range(0, len(nodes) - per_blob, per_blob)
+    ]
+    tail = (len(nodes) - 1) // per_blob * per_blob
+    blobs.append(encode_data_blob(nodes[tail:], ways[:10]))
+    blobs += [
+        encode_data_blob((), ways[i:i + 20]) for i in range(10, len(ways), 20)
+    ]
+    if rels:
+        blobs.append(encode_data_blob((), (), rels))
+    path.write_bytes(b"".join(blobs))
+
+
+def _row_tuples(df):
+    """Collected model-schema rows as the codec's tuples."""
+    out = []
+    for r in df.collect():
+        t = tuple(r)
+        if "members" in df.columns:
+            t = t[:7] + (
+                [(m["type"], m["ref"], m["role"]) for m in r["members"]],
+            ) + t[8:]
+        out.append(t)
+    return sorted(out, key=lambda t: (t[0], t[1]))
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+_CATALOG_TEXT = (
+    "west.osh.pbf BBOX -0.9,-0.9,0.1,0.9\n"
+    "east.osh.pbf BBOX -0.2,-0.5,0.9,0.5\n"
+)
+
+
+def _catalog():
+    from osm_history_splitter_spark.sources.config import parse_config_text
+
+    return parse_config_text(_CATALOG_TEXT)
+
+
+def _split_files(spark, frames, out):
+    from osm_history_splitter_spark.splitter import run_split
+
+    cat = _catalog()
+    run_split(
+        spark, *frames, cat, str(out), mode="softcut",
+        osm_filenames={e.name: f"{e.name}.osh.pbf" for e in cat},
+    )
+    return {e.name: read_pbf(str(out / "osm" / f"{e.name}.osh.pbf")) for e in cat}
+
+
+def test_load_pbf_dataframes_decodes_once(spark, tmp_path):
+    """After one action the split needs the file no more: deleting it
+    before run_split changes nothing, so no stage re-reads (re-decodes)
+    the input."""
+    import gc
+    import shutil
+
+    from osm_history_splitter_spark.sources.pbf import load_pbf_dataframes
+
+    p = tmp_path / "world.osh.pbf"
+    _write_multiblob(p, *_seeded_world(11))
+    shutil.copy(p, tmp_path / "copy.osh.pbf")
+
+    frames = load_pbf_dataframes(spark, str(p))
+    assert frames[0].count() > 0
+    p.unlink()
+    got = _split_files(spark, frames, tmp_path / "o1")
+    del frames
+    gc.collect()
+    want = _split_files(
+        spark,
+        load_pbf_dataframes(spark, str(tmp_path / "copy.osh.pbf")),
+        tmp_path / "o2",
+    )
+    assert got == want
+    assert all(n and w for n, w, _ in got.values())  # a real split
+    assert any(r for _, _, r in got.values())
+
+
+def test_load_pbf_dataframes_equal_driver_codec(spark, tmp_path):
+    """The three projections of the all-kinds decode equal the driver
+    codec on a multi-blob file with no relations (an empty kind), in the
+    model schemas."""
+    from osm_history_splitter_spark.model import (
+        NODE_SCHEMA,
+        RELATION_SCHEMA,
+        WAY_SCHEMA,
+    )
+    from osm_history_splitter_spark.sources.pbf import load_pbf_dataframes
+
+    p = tmp_path / "norels.osh.pbf"
+    nodes, ways, _ = _seeded_world(5)
+    _write_multiblob(p, nodes, ways, [])
+    want = read_pbf(str(p))
+    assert want[2] == [] and len(want[0]) == len(nodes)
+    frames = load_pbf_dataframes(spark, str(p))
+    for df, schema, rows in zip(
+        frames, (NODE_SCHEMA, WAY_SCHEMA, RELATION_SCHEMA), want
+    ):
+        assert df.schema == schema
+        assert _row_tuples(df) == sorted(rows, key=lambda t: (t[0], t[1]))
+
+
+def test_decode_cache_released_with_frames(spark, tmp_path, monkeypatch):
+    """No cached plan outlives the frames: dropping them (and a
+    fetch_and_split tick, which drops its own) leaves the cache empty."""
+    import gc
+    import hashlib
+
+    import osm_history_splitter_spark.fetch as fetch_mod
+    from osm_history_splitter_spark.sources.pbf import load_pbf_dataframes
+
+    # other tests may leave persisted frames behind in the shared session
+    spark.catalog.clearCache()
+    p = tmp_path / "w.osh.pbf"
+    _write_multiblob(p, *_seeded_world(3))
+    nodes, ways, rels = load_pbf_dataframes(spark, str(p))
+    derived = ways.select("id")
+    assert rels.count() > 0 and not _cache_empty(spark)
+    del nodes, ways
+    gc.collect()
+    assert not _cache_empty(spark)  # one frame still holds the decode
+    del rels
+    gc.collect()
+    assert _cache_empty(spark)
+    assert derived.count() > 0  # derived frames still work (re-decode)
+
+    m = tmp_path / "mirror"
+    m.mkdir()
+    name = "history-2024-06-01.osm.pbf"
+    (m / name).write_bytes(p.read_bytes())
+    digest = hashlib.md5((m / name).read_bytes()).hexdigest()
+    (m / f"{name}.md5").write_text(f"{digest}  {name}\n")
+    (m / "index.html").write_text(f'<a href="{name}">{name}</a>')
+    real = fetch_mod._read_url
+    monkeypatch.setattr(
+        fetch_mod, "_read_url",
+        lambda url: (m / "index.html").read_bytes()
+        if url.endswith("?C=M;O=D") else real(url),
+    )
+    work = tmp_path / "work"
+    work.mkdir()
+    (work / "two.config").write_text(_CATALOG_TEXT)
+    report = fetch_mod.fetch_and_split(
+        spark, f"file://{m}", str(work), load_pbf_dataframes, emit_osm=True,
+    )
+    assert report["splits"]["two"]["nodes"] > 0
+    assert (work / "extracts" / "2024-06-01" / "two" / "osm" / "west.osh.pbf").exists()
+    gc.collect()
+    assert _cache_empty(spark)
+
+
+def test_pbf_sink_seeded_multi_extract(spark, tmp_path, monkeypatch):
+    """The PBF sink on overlapping extracts with tiny blocks: header
+    first, nodes → ways → relations each sorted by (id, version), no blob
+    mixing kinds or extracts, and each file's elements exactly that
+    extract's input rows."""
+    import random
+
+    import osm_history_splitter_spark.plans.pbf_writer as pw
+    from osm_history_splitter_spark.model import (
+        NODE_SCHEMA,
+        RELATION_SCHEMA,
+        WAY_SCHEMA,
+    )
+    from osm_history_splitter_spark.plans.catalog import Extract, ExtractCatalog
+    from osm_history_splitter_spark.sources.pbf import _iter_elements
+    from pyspark.sql import types as T
+
+    monkeypatch.setattr(pw, "BLOCK_ROWS", 9)
+    rng = random.Random(29)
+    world = _seeded_world(29)
+    names = ("a", "b", "c")
+    # each row in one or two extracts; extract "c" gets no relations
+    member = [
+        [
+            (row, e)
+            for row in rows
+            for e in rng.sample(names, rng.randint(1, 2))
+            if not (kind == 2 and e == "c")
+        ]
+        for kind, rows in enumerate(world)
+    ]
+    frames = [
+        spark.createDataFrame(
+            [row + (e,) for row, e in pairs],
+            T.StructType(schema.fields + [T.StructField("extract", T.StringType())]),
+        )
+        for pairs, schema in zip(member, (NODE_SCHEMA, WAY_SCHEMA, RELATION_SCHEMA))
+    ]
+    cat = ExtractCatalog([Extract.bbox(e, -1, -1, 1, 1) for e in names])
+    paths = pw.write_extracts_pbf(*frames, cat, str(tmp_path), partitions=4)
+    assert not (tmp_path / "_pbf_fragments").exists()
+
+    for e in names:
+        blobs = list(iter_blobs(open(paths[e], "rb").read()))
+        assert blobs[0][0] == "OSMHeader"
+        assert all(t == "OSMData" for t, _ in blobs[1:])
+        kinds = []
+        for _, payload in blobs[1:]:
+            elems = list(_iter_elements(payload))
+            assert 0 < len(elems) <= 9
+            assert len({k for k, _ in elems}) == 1  # one kind per blob
+            kinds.append(elems[0][0])
+        # nodes, then ways, then relations
+        assert kinds == sorted(kinds, key=("node", "way", "relation").index)
+        got = read_pbf(paths[e])
+        for k, rows in enumerate(got):
+            keys = [(r[0], r[1]) for r in rows]
+            assert keys == sorted(keys)
+            # equality to this extract's rows also proves no blob carries
+            # another extract's elements
+            assert rows == sorted(
+                (row for row, x in member[k] if x == e),
+                key=lambda t: (t[0], t[1]),
+            )
+        assert got[2] or e == "c"
+
+
+def test_resume_after_failed_concurrent_marker_save(spark, tmp_path, monkeypatch):
+    """One marker save fails while the others run concurrently; a rerun
+    on the same checkpoint adopts the finished stages (their _DONE
+    stamps unchanged, no second save) and equals a clean split."""
+    import json
+
+    from osm_history_splitter_spark.plans.checkpoint import StageStore
+    from osm_history_splitter_spark.sources.pbf import load_pbf_dataframes
+    from osm_history_splitter_spark.splitter import MARKER_STAGES, run_split
+
+    p = tmp_path / "w.osh.pbf"
+    _write_multiblob(p, *_seeded_world(17))
+    frames = load_pbf_dataframes(spark, str(p))
+    cat = _catalog()
+    ck = tmp_path / "ck"
+
+    real_save = StageStore.save
+    saved, failed = [], []
+
+    def flaky_save(self, name, df):
+        saved.append(name)
+        if name == "extra_nodes" and not failed:
+            failed.append(name)
+            raise RuntimeError("injected failure")
+        return real_save(self, name, df)
+
+    monkeypatch.setattr(StageStore, "save", flaky_save)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_split(spark, *frames, cat, str(tmp_path / "o1"), checkpoint_dir=str(ck))
+    done = {s: (ck / f"{s}._DONE") for s in MARKER_STAGES if (ck / f"{s}._DONE").exists()}
+    assert set(done) == {"node_members", "way_members", "relation_members"}
+    stamps = {s: (f.read_text(), f.stat().st_mtime_ns) for s, f in done.items()}
+
+    saved.clear()
+    run_split(spark, *frames, cat, str(tmp_path / "o1"), checkpoint_dir=str(ck))
+    assert sorted(saved) == ["all_node_ids", "extra_nodes"]
+    assert {
+        s: (f.read_text(), f.stat().st_mtime_ns) for s, f in done.items()
+    } == stamps
+    assert json.loads((ck / "extra_nodes._DONE").read_text())["rows"] > 0
+
+    run_split(spark, *frames, cat, str(tmp_path / "o2"))
+
+    def rows(out, entity):
+        df = spark.read.parquet(str(tmp_path / out / entity))
+        return sorted(
+            (tuple(r) for r in df.collect()),
+            key=lambda t: (t[0], t[1], t[-1]),  # (id, version, extract)
+        )
+
+    for e in ("nodes", "ways", "relations"):
+        got = rows("o1", e)
+        assert got and got == rows("o2", e)

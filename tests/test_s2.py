@@ -197,6 +197,22 @@ def test_nonfinite_coords_get_sentinel():
     assert k[0] == grid.s2_cell_np([10.0], [20.0], 12)[0] >= 0
 
 
+def test_sentinel_key_decodes_to_nan():
+    # the inverse must not turn the -1 sentinel (a missing coordinate)
+    # back into a real face-5 point; valid keys in the same batch decode
+    # exactly as they do alone
+    lon = np.array([10.0, np.nan, -75.5])
+    lat = np.array([20.0, 20.0, -33.0])
+    for res in (1, 12, 30):
+        k = grid.s2_cell_np(lon, lat, res)
+        lo, la = grid.s2_cell_to_lonlat_np(np.append(k, -7), res)
+        assert np.isnan(lo[[1, 3]]).all() and np.isnan(la[[1, 3]]).all()
+        lo1, la1 = grid.s2_cell_to_lonlat_np(k[[0, 2]], res)
+        assert np.array_equal(lo[[0, 2]], lo1)
+        assert np.array_equal(la[[0, 2]], la1)
+        assert np.array_equal(grid.s2_cell_np(lo1, la1, res), k[[0, 2]])
+
+
 def test_null_coords_get_sentinel_spark(spark):
     # Spark nulls reach the Arrow kernel as NaN -> same -1 sentinel
     from pyspark.sql import functions as F
